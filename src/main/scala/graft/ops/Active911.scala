@@ -11,9 +11,15 @@ import org.apache.spark.sql.types._
   * responder-log explode/extract/dedup → GeoJSON Point Feature.
   *
   * Design notes (Spark-first, 100 TB stance):
-  *  - Every step here is a narrow transformation over built-in, codegen'd
+  *  - Every step here is a narrow transformation over built-in
   *    expressions — the whole pipeline runs with ZERO shuffles; one input
   *    split (an agency's envelope batch) never leaves its executor.
+  *  - The scalar expressions are codegen'd with subexpression
+  *    elimination; the array higher-order functions (`transform`,
+  *    `filter`, `aggregate`) are NOT: they evaluate their lambdas through
+  *    the interpreter, and every reference to a subexpression inside a
+  *    lambda is evaluated again. Work inside a lambda is bound once by
+  *    routing it through a lambda variable (see [[responseLinks]]).
   *  - The responder dedup (reference `task.ts:187-209`, a JS `Map` with
   *    last-writer-wins values but first-insertion iteration order) is done
   *    with array higher-order functions *inside the row*, not a
@@ -148,12 +154,18 @@ object Active911 {
     split(regexp_replace(text, "\r\n", "\n"),
       "\n(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)")
 
+  /** Base64-decode an envelope's `message`; null when it is null or not
+    * valid base64 (never throws, so one bad payload cannot fail the task).
+    */
+  private def payload(message: Column): Column = try_to_binary(message, lit("base64"))
+
   /** Decode wire envelopes into alert rows (reference `task.ts:155-170`):
     * JSONP unwrap → JSON parse → base64 decode → CSV parse against
     * [[alertSchema]] (header row dropped; header order is the export's
     * schema order). Rows with `result = 'error'` are excluded — route
     * them through [[envelopeErrors]] (the reference's error side channel,
-    * `task.ts:162-165`). Pass-through columns of `envelopes` (e.g.
+    * `task.ts:162-165`), as are envelopes that are not JSON or whose
+    * payload is not base64. Pass-through columns of `envelopes` (e.g.
     * `agency_id`) are preserved.
     */
   def alertsFromEnvelopes(envelopes: DataFrame, rawCol: String = "raw"): DataFrame = {
@@ -163,7 +175,7 @@ object Active911 {
       .filter(coalesce(col("_env.result"), lit("")) =!= "error")
     val recs = env
       .select((passThrough :+
-        posexplode(csvRecords(decode(unbase64(col("_env.message")), "UTF-8")))): _*)
+        posexplode(csvRecords(decode(payload(col("_env.message")), "UTF-8")))): _*)
       .filter(col("pos") >= 1 && trim(col("col")) =!= "") // drop header + trailing blank
       .withColumn("_alert", from_csv(col("col"), alertSchema,
         Map("quote" -> "\"", "escape" -> "\"")))
@@ -171,14 +183,23 @@ object Active911 {
   }
 
   /** The error branch of the envelope decode (reference `task.ts:162-165`):
-    * one row per failed agency envelope with its API error message.
+    * one row per failed agency envelope with its API error message, and
+    * one per envelope that [[alertsFromEnvelopes]] cannot decode —
+    * `malformed_json` when the body has no `message` (e.g. a gateway's
+    * HTML page), `bad_payload` when the message is not base64. A null
+    * body is no envelope (the DSv2 source's transport-failure rows carry
+    * their error in `fetch_error`) and yields no row.
     */
   def envelopeErrors(envelopes: DataFrame, rawCol: String = "raw"): DataFrame = {
     val passThrough = envelopes.columns.filterNot(_ == rawCol).map(col).toSeq
+    val message = col("_env.message")
+    val apiError = coalesce(col("_env.result") === "error", lit(false))
+    val undecodable = when(message.isNull, "malformed_json")
+      .when(payload(message).isNull, "bad_payload")
     envelopes
       .withColumn("_env", from_json(unwrapJsonp(col(rawCol)), envelopeSchema))
-      .filter(col("_env.result") === "error")
-      .select((passThrough :+ col("_env.message").as("error")): _*)
+      .filter(apiError || (col(rawCol).isNotNull && undecodable.isNotNull))
+      .select((passThrough :+ when(apiError, message).otherwise(undecodable).as("error")): _*)
   }
 
   /** Coordinate fix/filter (reference `task.ts:172-185`): if either
@@ -210,32 +231,40 @@ object Active911 {
     * FIRST occurrence fixes the output position. All in-row (no shuffle).
     */
   def responseLinks(responses: Column): Column = {
+    // Lambdas run interpreted, without subexpression elimination, so each
+    // line is built once — regex groups first, then the link from the
+    // bound groups — and the dedup is one fold over the links. Reading
+    // the links inside a per-callsign lambda would rebuild them per callsign.
     val lines = filter(split(coalesce(responses, lit("")), "\n"),
       l => l.startsWith("Got a response of "))
-    val entries = transform(lines, l => {
-      val matched = regexp_extract(l, ResponseRegex, 0) =!= ""
-      val name = when(matched, trim(regexp_extract(l, ResponseRegex, 2)))
-        .otherwise("Unknown")
+    val groups = transform(lines, l => struct(
+      regexp_extract(l, ResponseRegex, 1).as("response"),
+      regexp_extract(l, ResponseRegex, 2).as("name"),
+      regexp_extract(l, ResponseRegex, 4).as("time")))
+    val links = transform(groups, g => {
+      // group 2 is `.+?`: non-empty exactly when the line matched
+      val matched = g("name") =!= ""
       struct(
-        name.as("key"),
         lit("t-s").as("relation"),
-        name.as("callsign"),
-        when(matched, trim(regexp_extract(l, ResponseRegex, 1)))
-          .otherwise("Unknown").as("remarks"),
-        when(matched,
-          isoUtc(parseTime(trim(regexp_extract(l, ResponseRegex, 4)))))
-          .as("production_time"))
+        when(matched, trim(g("name"))).otherwise("Unknown").as("callsign"),
+        when(matched, trim(g("response"))).otherwise("Unknown").as("remarks"),
+        when(matched, isoUtc(parseTime(trim(g("time"))))).as("production_time"))
     })
-    val keysInOrder = array_distinct(transform(entries, e => e.getField("key")))
-    transform(keysInOrder, k => {
-      val last = element_at(filter(entries, e => e.getField("key") === k), -1)
-      struct(
-        last.getField("relation").as("relation"),
-        last.getField("callsign").as("callsign"),
-        last.getField("remarks").as("remarks"),
-        last.getField("production_time").as("production_time"))
-    })
+    val none = array().cast(LinksType)
+    aggregate(links, none, (acc, link) => {
+      val key = link("callsign")
+      when(exists(acc, a => a("callsign") === key),
+        transform(acc, a => when(a("callsign") === key, link).otherwise(a)))
+        .otherwise(concat(acc, array(link)))
+    }, acc => coalesce(acc, none)) // the accumulator is typed nullable; the links are not
   }
+
+  /** Type of [[responseLinks]]; the fields stay nullable, as
+    * [[Schemas.FeatureSchema]] publishes them.
+    */
+  private val LinksType = ArrayType(StructType(
+    Seq("relation", "callsign", "remarks", "production_time")
+      .map(StructField(_, StringType))), containsNull = false)
 
   private val Ind32 = " " * 32
   private val Ind28 = " " * 28

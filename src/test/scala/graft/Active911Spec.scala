@@ -1,6 +1,9 @@
 package graft
 
+import java.util.Base64
+
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.RegExpExtract
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Active911, Fixtures}
@@ -109,6 +112,39 @@ class Active911Spec extends SparkSpec {
     assert(jane.getString(3) == "2025-12-08T23:29:05.000Z") // EST −5
     val unknown = links(2)
     assert(unknown.getString(2) == "Unknown" && unknown.getString(3) == null)
+  }
+
+  test("links: each responder line is regex-parsed once, not once per callsign") {
+    // Lambdas are interpreted without subexpression elimination, so every
+    // copy of an extraction in the tree is a regex run per line per row.
+    val plan = Seq.empty[String].toDF("r")
+      .select(Active911.responseLinks(col("r"))).queryExecution.analyzed
+    val perLine = plan.expressions.flatMap(_.collect {
+      case e: RegExpExtract if e.regexp.eval().toString == Active911.ResponseRegex =>
+        e.idx.eval().asInstanceOf[Int]
+    })
+    assert(perLine.nonEmpty)
+    assert(perLine.size == perLine.distinct.size,
+      s"group extractions repeat in the tree: ${perLine.sorted}")
+  }
+
+  test("envelopes: gateway HTML and truncated base64 reach the error channel") {
+    val gatewayHtml =
+      "<html><head><title>502 Bad Gateway</title></head><body>502 Bad Gateway</body></html>"
+    // drop the padding and cut to a last unit of one character
+    val b64 = Base64.getEncoder.encodeToString(Fixtures.agency101Csv.getBytes("UTF-8"))
+      .stripSuffix("=").stripSuffix("=")
+    val truncated = s"""cb({"result":"success","message":"${b64.take((b64.length - 1) / 4 * 4 + 1)}"})"""
+    val env = (Fixtures.envelopes ++ Seq(201 -> gatewayHtml, 202 -> truncated))
+      .toDF("agency_id", "raw")
+    // the batch still decodes every good envelope
+    val ids = Active911.pipeline(env).collect().map(_.getString(0)).sorted
+    assert(ids.toSeq == Seq("active911-9001", "active911-9002",
+      "active911-9003", "active911-9101", "active911-9102"))
+    val errs = Active911.envelopeErrors(env).collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toSet
+    assert(errs == Set(103 -> "Agency not available",
+      201 -> "malformed_json", 202 -> "bad_payload"))
   }
 
   test("remarks: byte-exact template whitespace (task.ts:221-225)") {

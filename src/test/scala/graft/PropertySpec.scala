@@ -113,16 +113,19 @@ class PropertySpec extends SparkSpec {
   // --- A1: last-wins dedup, first-occurrence key order ------------------
 
   test("responseLinks: last-wins per callsign, keys in first-appearance order") {
-    val names = Seq("Alice", "Bob Smith", "Carol")
-    val resps = Seq("Responding", "Unavailable", "On Scene")
+    // padded names trim onto the same callsign as their bare form
+    val names = Seq("Alice", " Alice", "Bob Smith", "Carol", "Dave ", "Erin",
+      "  Frank  ", "Frank")
+    val resps = Seq("Responding", "Unavailable", "On Scene", " Cancelled ")
     val lineGen = Gen.frequency(
-      5 -> (for {
+      6 -> (for {
         n <- Gen.oneOf(names); r <- Gen.oneOf(resps)
         id <- Gen.choose(100, 999); mi <- Gen.choose(0, 59)
       } yield f"Got a response of $r to $n($id) at 12/8/2025 10:$mi%02d:00 EST."),
       1 -> Gen.const("Got a response of malformed line without the shape"),
+      1 -> Gen.const("Got a response of Responding to Alice at 12/8/2025 10:00:00 EST."),
       1 -> Gen.const("random chatter that is filtered out"))
-    val logGen = Gen.choose(0, 10).flatMap(n => Gen.listOfN(n, lineGen))
+    val logGen = Gen.choose(0, 30).flatMap(n => Gen.listOfN(n, lineGen))
     val cases = sample(logGen, 80, 21L).zipWithIndex
     val df = cases.map { case (ls, i) => (i.toLong, ls.mkString("\n")) }
       .toDF("case_id", "responses")
